@@ -27,6 +27,17 @@ BASE_RES = 13
 EPOCH = "2020-01-01"  # ts = EPOCH + ts_idx days for synthetic tiles
 
 
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` sized to the host: half of physical RAM,
+    capped at 16g (in local mode the driver heap also holds every task,
+    so a fixed 16g overcommits a smaller box)."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError, AttributeError):
+        return "16g"
+    return f"{max(1024, min(16 << 10, total // 2 >> 20))}m"
+
+
 def get_spark(app: str = "dea-conflux-spark", cpus: int | str | None = None,
               shuffle_partitions: int | None = None, extra: dict | None = None):
     """Create a local SparkSession tuned for this engine.
@@ -73,7 +84,8 @@ def get_spark(app: str = "dea-conflux-spark", cpus: int | str | None = None,
         # cache batch means ~160 MB allocations per batch -> GC spikes;
         # 512 rows keeps cached batches ~8 MB
         .config("spark.sql.inMemoryColumnarStorage.batchSize", "512")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         .config("spark.python.worker.reuse", "true")
         .config("spark.python.worker.idleTimeoutSeconds", "300")
         .config("spark.ui.enabled", "false")

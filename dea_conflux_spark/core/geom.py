@@ -141,7 +141,9 @@ def centroid(rings) -> tuple:
 
 
 def bbox(rings) -> tuple:
-    return prepare(rings).bbox
+    pts = np.concatenate(_as_rings(rings))
+    return (pts[:, 0].min(), pts[:, 1].min(), pts[:, 0].max(),
+            pts[:, 1].max())
 
 
 # ---------------------------------------------------------------- rect tests
@@ -149,26 +151,20 @@ def bbox(rings) -> tuple:
 def _segments_cross_rect(prep: Prepared, rx0, ry0, rx1, ry1) -> np.ndarray:
     """For each rect (vectorized over N rects), does any polygon edge
     intersect the rect?  Uses the slab (Liang-Barsky style) clip test per
-    edge x rect.  rx* are arrays (N,)."""
+    edge x rect, all four slabs in one (4, E, N) pass.  rx* are arrays
+    (N,)."""
     x1 = prep.x1[:, None]; y1 = prep.y1[:, None]
-    x2 = prep.x2[:, None]; y2 = prep.y2[:, None]
-    dx = x2 - x1
-    dy = y2 - y1
+    dx = prep.x2[:, None] - x1
+    dy = prep.y2[:, None] - y1
+    p = np.stack([-dx, dx, -dy, dy])                                # (4,E,1)
+    q = np.stack([x1 - rx0, rx1 - x1, y1 - ry0, ry1 - y1])          # (4,E,N)
     with np.errstate(divide="ignore", invalid="ignore"):
-        t0 = np.zeros_like(x1 + rx0[None, :])
-        t1 = np.ones_like(t0)
-        for p, q in (( -dx, x1 - rx0[None, :]), (dx, rx1[None, :] - x1),
-                     ((-dy), y1 - ry0[None, :]), (dy, ry1[None, :] - y1)):
-            p = np.broadcast_to(p, t0.shape)
-            q = np.broadcast_to(q, t0.shape)
-            r = np.where(p != 0, q / np.where(p == 0, 1.0, p), np.nan)
-            ent = (p < 0)
-            t0 = np.where(ent, np.maximum(t0, r), t0)
-            t1 = np.where(~ent & (p != 0), np.minimum(t1, r), t1)
-            # p == 0 and q < 0 -> parallel and outside: mark impossible
-            t0 = np.where((p == 0) & (q < 0), 2.0, t0)
-    hit = t0 <= t1
-    return hit.any(axis=0)
+        r = q / np.where(p == 0, 1.0, p)
+    t0 = np.where(p < 0, r, 0.0).max(axis=0)    # latest entry
+    t1 = np.where(p > 0, r, 1.0).min(axis=0)    # earliest exit
+    # p == 0 and q < 0 -> parallel and outside the slab: no crossing
+    outside = ((p == 0) & (q < 0)).any(axis=0)
+    return ((t0 <= t1) & ~outside).any(axis=0)
 
 
 def classify_rects(prep: Prepared, x0, y0, x1, y1) -> np.ndarray:
@@ -190,18 +186,15 @@ def classify_rects(prep: Prepared, x0, y0, x1, y1) -> np.ndarray:
     ci = np.nonzero(cand)[0]
     cx0, cy0, cx1, cy1 = x0[ci], y0[ci], x1[ci], y1[ci]
     crossed = _segments_cross_rect(prep, cx0, cy0, cx1, cy1)
-    # All four corners inside?
-    corners_in = np.ones(len(ci), dtype=bool)
-    for px, py in ((cx0, cy0), (cx1, cy0), (cx0, cy1), (cx1, cy1)):
-        corners_in &= contains(prep, px, py)
+    # All four corners inside? (one PIP pass over the 4 x N corners)
+    corners_in = contains(prep, np.concatenate([cx0, cx1, cx0, cx1]),
+                          np.concatenate([cy0, cy0, cy1, cy1])
+                          ).reshape(4, -1).all(axis=0)
     full = corners_in & ~crossed
     # Partial: edge crosses, or rect engulfs part of the polygon (a vertex
     # inside the rect), or corners inside but boundary touches.
-    vx = prep.x1; vy = prep.y1
-    vert_in = np.zeros(len(ci), dtype=bool)
-    for k in range(len(ci)):
-        vert_in[k] = np.any((vx >= cx0[k]) & (vx < cx1[k]) &
-                            (vy >= cy0[k]) & (vy < cy1[k]))
+    vx = prep.x1[:, None]; vy = prep.y1[:, None]
+    vert_in = ((vx >= cx0) & (vx < cx1) & (vy >= cy0) & (vy < cy1)).any(axis=0)
     some = crossed | vert_in | corners_in
     out[ci[full & ~vert_in]] = 2
     out[ci[some & ~(full & ~vert_in)]] = 1
@@ -272,6 +265,18 @@ def _on_original_segment(xA, yA, xB, yB, segs, eps=1e-9) -> bool:
         return (cross <= tol) & (t >= -eps) & (t <= 1 + eps) & (ln2 > 0)
 
     return bool((on_edge(xA, yA) & on_edge(xB, yB)).any())
+
+
+def overflow_possible(box, rx0, ry0, rx1, ry1) -> bool:
+    """Exact bbox prefilter for :func:`edge_directions`: False when the
+    polygon's bbox ``box`` lies inside the closed rect (the clip is the
+    polygon itself) or meets it in at most an edge or corner (the clip
+    has no area) — every flag is then False and the clip can be
+    skipped."""
+    bx0, by0, bx1, by1 = box
+    if bx1 <= rx0 or bx0 >= rx1 or by1 <= ry0 or by0 >= ry1:
+        return False
+    return not (rx0 <= bx0 and bx1 <= rx1 and ry0 <= by0 and by1 <= ry1)
 
 
 def edge_directions(rings, rx0, ry0, rx1, ry1) -> dict:

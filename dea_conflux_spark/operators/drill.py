@@ -7,24 +7,29 @@ Spark-first re-expression of the reference's scene drill
    ``image_id`` JVM-side (bytes column pruned out of the scan).
 2. footprint candidates — equi-join ``tile_cells ⋈ polygon_cover`` on
    ``cell`` per DISTINCT tile footprint (broadcast cover when small,
-   salted shuffle-hash otherwise), grouped to one candidate list per
-   footprint.  This subsumes the reference's quick-bbox +
-   exact-intersects filter cascade (drill.py:302-340,282-299): the cell
-   join IS the cheap prefilter.
-3. candidate attach — rings join onto the footprint-candidate table
-   (``attach_rings``: geometry travels only to footprints that need it;
-   no driver collect, no whole-layer broadcast), then a broadcast join
-   onto tiles by (gx, gy): tile ``bytes`` are never shuffled and reach
-   the UDF exactly once, never once per polygon.
-4. drill UDF (``mapInPandas``, Arrow batches) — decode tile, run the
-   plugin's vectorized ``transform``, assign pixels to polygons by exact
-   ray-cast PIP on pixel centres with ascending-ordinal overwrite (matching
-   rasterio last-wins, reference drill.py:85-90), and emit per-(polygon,
-   tile) **partial aggregates** — pixels never leave the task.
+   salted shuffle-hash otherwise).  This subsumes the reference's
+   quick-bbox + exact-intersects filter cascade (drill.py:302-340,
+   282-299): the cell join IS the cheap prefilter.
+3. planning — ONE driver action collects the candidate-pruned polygon
+   dimension at polygon grain (poly_id, ordinal, rings, candidate
+   footprints) together with the per-timestep extents; the driver ships
+   ``{(gx, gy): candidates}`` and ``{poly_id: rings}`` in one broadcast.
+   Tiles need no candidate join: those of footprints without candidates
+   are filtered JVM-side, the rest stream to the UDF in place — tile
+   ``bytes`` are never shuffled and reach the UDF exactly once, never
+   once per polygon.  (Above 100k candidate polygons the rings instead
+   ride a broadcast candidate join, ``attach_rings``.)
+4. drill UDF (``mapInArrow``) — look up the footprint's candidates by its
+   (gx, gy), run the plugin's kernel over each footprint's time stack,
+   assign pixels to polygons by exact ray-cast PIP on pixel centres with
+   ascending-ordinal overwrite (matching rasterio last-wins, reference
+   drill.py:85-90), and emit per-(polygon, tile) **partial aggregates** —
+   pixels never leave the task.
 5. final combine — native ``groupBy(poly_id, ts).agg`` (codegen'd partial →
    final, the reference's per-polygon summarise loop drill.py:675-686).
-6. optional edge-direction flags left join (reference drill.py:604-616,
-   697-703).
+6. optional edge-direction flags (reference drill.py:604-616, 697-703),
+   computed on the driver from the collected rings and left-joined
+   through two broadcast local relations.
 """
 
 from __future__ import annotations
@@ -47,9 +52,9 @@ _ID_RE = re.compile(r"^t(\d+)_x(\d+)_y(\d+)$")
 FLAG_COLS = ["conflux_n", "conflux_s", "conflux_e", "conflux_w"]
 
 
-def _make_driller(plugin: DrillSpec, g: GridSpec, rmap: dict | None = None):
+def _make_driller(plugin: DrillSpec, g: GridSpec, dims: tuple | None = None):
     """Per-task drill state shared by both execution paths (the joined
-    stream ``mapInPandas`` and the cogrouped ``applyInPandas``): a
+    stream ``mapInArrow`` and the cogrouped ``applyInArrow``): a
     prepared-geometry cache, an owner-raster cache, a per-footprint
     candidate-list cache, and the per-tile drill step.  Returns
     ``(drill_one, cands_for, owner_for, prep_cache)``.
@@ -61,12 +66,17 @@ def _make_driller(plugin: DrillSpec, g: GridSpec, rmap: dict | None = None):
       slot reuses it: rasterisation cost is O(distinct footprints), not
       O(tiles).  Small cap; adjacency (partition-local sort / grouping)
       makes repeats adjacent so a handful of entries achieves ~full reuse.
-    * candidate cache (``cands_for``) — the per-row candidate payload is
-      identical for every timestep of a footprint, so the decode of the
-      Arrow struct list, the prep inserts, and the ordinal sort run once
-      per footprint instead of once per tile row (~candidates x tiles
-      dict/list operations saved).  The per-slot scratch also memoizes the
-      {ordinal: poly_id} output map and the ordinal list.
+    * candidate cache (``cands_for``) — the candidates are identical for
+      every timestep of a footprint, so the candidate lookup (or the
+      decode of a ring-carrying join payload), the prep inserts and the
+      ordinal sort run once per footprint instead of once per tile row.
+      The per-slot scratch also memoizes the {position: poly_id} output
+      map and the position list.
+
+    ``dims`` is the planned drill's broadcast ``(cmap, rmap)``:
+    ``{(gx, gy): ascending [(ordinal, poly_id)]}`` and
+    ``{poly_id: rings}``; without it (``rings="join"``) the candidates and
+    their rings arrive in each row's ``cand_polys`` payload.
 
     The three caches evict TOGETHER (inside the owner build): a candidate
     cache hit therefore implies its Prepared geometries are still
@@ -82,24 +92,21 @@ def _make_driller(plugin: DrillSpec, g: GridSpec, rmap: dict | None = None):
         c = cands_cache.get(key)
         if c is not None:
             return c
-        c = []
-        if rmap is None:
+        if dims is None:
             # rings inside the candidate join payload (already in
             # ascending-ordinal order via sort_array)
+            c = []
             for s in payload:
                 ordinal, pid = int(s["ordinal"]), s["poly_id"]
                 if pid not in prep_cache:
                     prep_cache[pid] = geom.prepare(s["rings"])
                 c.append((ordinal, pid))
         else:
-            # id-only payload; geometry from the pruned-dimension
-            # broadcast, sorted to ascending drill order
-            for pid in payload:
-                ordinal, rings_v = rmap[pid]
+            cmap, rmap = dims
+            c = cmap[key]
+            for _, pid in c:
                 if pid not in prep_cache:
-                    prep_cache[pid] = geom.prepare(rings_v)
-                c.append((ordinal, pid))
-            c.sort()
+                    prep_cache[pid] = geom.prepare(rmap[pid])
         cands_cache[key] = c
         return c
 
@@ -260,32 +267,56 @@ def attach_rings(fc: DataFrame, polygons: DataFrame,
                 .alias("cand_polys")))
 
 
+def _footprint_cells(meta: DataFrame, base_res: int) -> DataFrame:
+    """(gx, gy, cell) — the covering cells of every DISTINCT tile
+    footprint: tiles at the same grid slot share one bbox regardless of
+    timestep, so the cell join runs once per footprint, not per tile."""
+    fps = meta.select("gx", "gy", "x0", "y0", "x1", "y1").distinct()
+    return tile_cells(fps, base_res=base_res)
+
+
+def _footprint_pairs(meta: DataFrame, poly_cells: DataFrame,
+                     base_res: int = BASE_RES,
+                     broadcast_cover: bool = True) -> DataFrame:
+    """(gx, gy, poly_id) candidate pairs, one per matching cell."""
+    cover = poly_cells.select("cell", "poly_id")
+    if broadcast_cover:
+        cover = F.broadcast(cover)
+    return (_footprint_cells(meta, base_res).join(cover, "cell")
+            .select("gx", "gy", "poly_id"))
+
+
+def _footprint_pairs_salted(meta: DataFrame, poly_cells: DataFrame,
+                            base_res: int = BASE_RES,
+                            n_salt: int = 8) -> DataFrame:
+    """:func:`_footprint_pairs` through a salted shuffle-hash join (see
+    :func:`footprint_candidates_salted`)."""
+    spark = meta.sparkSession
+    fcells = _footprint_cells(meta, base_res).withColumn(
+        "salt", F.pmod(F.xxhash64("gx", "gy", "cell"), F.lit(n_salt)))
+    salts = spark.range(n_salt).select(F.col("id").cast("int").alias("salt"))
+    cover = (poly_cells.select("cell", "poly_id")
+             .crossJoin(F.broadcast(salts)))
+    return (fcells.hint("shuffle_hash").join(cover, ["cell", "salt"])
+            .select("gx", "gy", "poly_id"))
+
+
+def _by_footprint(pairs: DataFrame) -> DataFrame:
+    return (pairs.groupBy("gx", "gy")
+            .agg(F.collect_set("poly_id").alias("cand_polys")))
+
+
 def footprint_candidates(meta: DataFrame, poly_cells: DataFrame,
                          grid: GridSpec, base_res: int = BASE_RES,
                          broadcast_cover: bool = True) -> DataFrame:
     """(gx, gy, cand_polys array<string>) per DISTINCT tile footprint.
 
-    Tiles at the same grid slot share one bbox regardless of timestep, so
-    the cell join runs once per footprint, not once per tile — the
-    candidate table stays tiny (grid-slot cardinality) and broadcasts
-    cheaply no matter how many timesteps the tile table holds.  ``meta``
-    is the placement table from ``tile_meta`` (callers with an external
-    catalog can pass a cheap metadata-only source instead of re-scanning
-    the full tile table)."""
-    fps = meta.select("gx", "gy", "x0", "y0", "x1", "y1").distinct()
-    fps = fps.withColumn(
-        "image_id", F.format_string("t0000_x%03d_y%03d", "gx", "gy"))
-    fcells = tile_cells(fps, base_res=base_res)
-    fcells = fcells.select(
-        F.regexp_extract("image_id", r"_x(\d+)_", 1).cast("int").alias("gx"),
-        F.regexp_extract("image_id", r"_y(\d+)$", 1).cast("int").alias("gy"),
-        "cell")
-    cover = poly_cells.select("cell", "poly_id")
-    if broadcast_cover:
-        cover = F.broadcast(cover)
-    return (fcells.join(cover, "cell")
-            .groupBy("gx", "gy")
-            .agg(F.collect_set("poly_id").alias("cand_polys")))
+    The candidate table stays tiny (grid-slot cardinality) no matter how
+    many timesteps the tile table holds.  ``meta`` is the placement table
+    from ``tile_meta`` (callers with an external catalog can pass a cheap
+    metadata-only source instead of re-scanning the full tile table)."""
+    return _by_footprint(_footprint_pairs(meta, poly_cells, base_res,
+                                          broadcast_cover))
 
 
 def footprint_candidates_salted(meta: DataFrame, poly_cells: DataFrame,
@@ -302,22 +333,8 @@ def footprint_candidates_salted(meta: DataFrame, poly_cells: DataFrame,
     salt, so the join key becomes (cell, salt).  AQE skew-join splitting
     stays on as the second line of defence.
     """
-    spark = meta.sparkSession
-    fps = meta.select("gx", "gy", "x0", "y0", "x1", "y1").distinct()
-    fps = fps.withColumn(
-        "image_id", F.format_string("t0000_x%03d_y%03d", "gx", "gy"))
-    fcells = tile_cells(fps, base_res=base_res).select(
-        F.regexp_extract("image_id", r"_x(\d+)_", 1).cast("int").alias("gx"),
-        F.regexp_extract("image_id", r"_y(\d+)$", 1).cast("int").alias("gy"),
-        "cell")
-    fcells = fcells.withColumn(
-        "salt", F.pmod(F.xxhash64("gx", "gy", "cell"), F.lit(n_salt)))
-    salts = spark.range(n_salt).select(F.col("id").cast("int").alias("salt"))
-    cover = (poly_cells.select("cell", "poly_id")
-             .crossJoin(F.broadcast(salts)))
-    joined = fcells.hint("shuffle_hash").join(cover, ["cell", "salt"])
-    return (joined.groupBy("gx", "gy")
-            .agg(F.collect_set("poly_id").alias("cand_polys")))
+    return _by_footprint(_footprint_pairs_salted(meta, poly_cells, base_res,
+                                                 n_salt))
 
 
 def candidate_pairs(tiles: DataFrame, poly_cells: DataFrame, grid: GridSpec,
@@ -333,52 +350,67 @@ def candidate_pairs(tiles: DataFrame, poly_cells: DataFrame, grid: GridSpec,
             .select("image_id", F.explode("cand_polys").alias("poly_id")))
 
 
-def drill_partials(tiles: DataFrame, polygons: DataFrame, plugin: DrillSpec,
-                   grid: GridSpec, *, base_res: int = BASE_RES,
-                   broadcast_cover: bool = True,
-                   broadcast_cands: bool = True,
-                   rings: str = "auto",
-                   meta: DataFrame | None = None) -> DataFrame:
-    """Per-(polygon, tile) partial aggregates:
-    ``(poly_id, image_id, ts, <partial cols>)``.  This is the map-side
-    combine stage; ``drill`` folds it into final metrics.  Exposed
-    separately because the rows double as the tile->polygon assignment
-    record (lineage + golden tests).
+# candidate polygons above which rings="auto" leaves the driver-planned
+# path for the ring-carrying candidate join
+DIM_MAX_POLYS = 100_000
 
-    ``rings`` selects how candidate geometry reaches the workers:
 
-    * ``"dim"`` — one torrent broadcast of the CANDIDATE-PRUNED polygon
-      dimension ({poly_id: (ordinal, rings)}); the per-tile join payload
-      is then just the candidate id list.  A per-footprint ring set
-      attached through the join is re-serialised across the Arrow
-      boundary for EVERY timestep row of the footprint (measured ~2.4x
-      the no-rings floor at 512 timesteps); the dimension broadcast ships
-      each ring set to each executor once.  Geometry is pruned to
-      polygons that are a candidate of at least one footprint in this
-      drill, so broadcast size tracks the queried region, not the layer.
-    * ``"join"`` — rings travel inside the candidate join (attach_rings);
-      nothing is collected at the driver.  NB with the default
-      ``broadcast_cands=True`` the ring-attached candidate table is still
-      BROADCAST — since rings are nested per footprint, that broadcast is
-      at least as large as the pruned dimension, so this mode trades
-      driver memory for executor broadcast memory without removing the
-      size ceiling.  When the candidate GEOMETRY itself outgrows the
-      broadcast budget, use :func:`drill_partials_cogrouped` over a
-      bucketed tile layout — Exchange-free on the tile side, geometry
-      shuffled (not broadcast) on the footprint key.
-    * ``"auto"`` (default) — ``dim`` while the pruned candidate dimension
-      is ≤ ~100k polygons (a narrow count on the dim table), else
-      ``join`` — same size-gated strategy switch as broadcast_cover.
-    """
+def _plan_dims(pairs: DataFrame, polygons: DataFrame, limit: int | None,
+               meta_extents: DataFrame | None) -> tuple:
+    """THE planning action of the default drill: one collect of the
+    candidate-pruned polygon dimension at polygon grain —
+    ``(poly_id, ordinal, rings, fps [(gx, gy), ...])``, at most ``limit``
+    rows — plus, when ``meta_extents`` is given, the per-timestep observed
+    extents ``(ts_us, ex0, ey0, ex1, ey1)`` of that placement table
+    (UNION ALL, so both ride one query).  Returns
+    ``(cand_rows, extent_rows)``."""
+    cands = (pairs.groupBy("poly_id")
+             .agg(F.expr("collect_set(struct(gx, gy)) AS fps"))
+             .join(polygons.select("poly_id", "ordinal", "rings"),
+                   "poly_id"))
+    if limit is not None:
+        # coalesced to one partition, the limit needs no exchange of its
+        # own (the result is at most ``limit`` rows for the driver anyway)
+        cands = cands.coalesce(1).limit(limit)
+    if meta_extents is not None:
+        ext = extents_by_ts(meta_extents).selectExpr(
+            "unix_micros(ts) AS ts_us", "ex0", "ey0", "ex1",
+            "ey1").dropna()   # malformed ids: no extent, no flags
+        cands = cands.unionByName(ext, allowMissingColumns=True)
+    rows = cands.collect()
+    ext_rows = [r for r in rows if r["poly_id"] is None]
+    return [r for r in rows if r["poly_id"] is not None], ext_rows
+
+
+def _dims(cand_rows: list) -> tuple:
+    """(cmap, rmap): ``{(gx, gy): ascending [(ordinal, poly_id)]}`` and
+    ``{poly_id: rings}`` from the planning rows."""
+    cmap: dict = {}
+    rmap = {}
+    for r in cand_rows:
+        pid, ordinal = r["poly_id"], int(r["ordinal"])
+        rmap[pid] = r["rings"]
+        for gx, gy in r["fps"]:
+            cmap.setdefault((gx, gy), []).append((ordinal, pid))
+    for c in cmap.values():
+        c.sort()
+    return cmap, rmap
+
+
+def _drill_partials(tiles: DataFrame, polygons: DataFrame, plugin: DrillSpec,
+                    grid: GridSpec, *, base_res: int, broadcast_cover,
+                    broadcast_cands: bool, rings: str,
+                    meta: DataFrame | None, want_extents: bool) -> tuple:
+    """:func:`drill_partials` plus what its planning action learned:
+    ``(partials, planned)`` where ``planned`` is ``(rmap, extent_rows)``
+    on the driver-planned path (extent rows only if ``want_extents``) and
+    None on the ``rings="join"`` path."""
     if rings not in ("auto", "dim", "join"):
         raise ValueError(f"rings must be 'auto', 'dim' or 'join', got "
                          f"{rings!r}")
     spark = tiles.sparkSession
     sc = spark.sparkContext
 
-    # The cover table is the small join side — cache it so the several
-    # actions inside one drill (candidate join, partials, final agg) don't
-    # recompute the quadtree covers.
     poly_cells = polygon_cover_df(polygons, base_res=base_res)
     meta_src = meta if meta is not None else tile_meta(tiles, grid)
     if broadcast_cover == "auto":
@@ -389,53 +421,38 @@ def drill_partials(tiles: DataFrame, polygons: DataFrame, plugin: DrillSpec,
         poly_cells = poly_cells.cache()
         broadcast_cover = poly_cells.count() <= 2_000_000
     if broadcast_cover:
-        fc = footprint_candidates(meta_src, poly_cells, grid, base_res,
-                                  broadcast_cover=True)
+        pairs = _footprint_pairs(meta_src, poly_cells, base_res)
     else:
-        fc = footprint_candidates_salted(meta_src, poly_cells, grid,
-                                         base_res)
-    rings_b = None
-    if rings in ("auto", "dim"):
-        # fc feeds up to three actions on these paths (dim count, dim
-        # collect, the tile join) — materialise it once instead of
-        # re-deriving the footprint-candidate join per action.  fc is the
-        # small footprint-grain table (id lists only, no geometry).
-        fc = fc.localCheckpoint(eager=True)
-    if rings == "auto":
-        # candidate-pruned dimension: only polygons that are a candidate
-        # of at least one footprint in this drill
-        cand_ids = fc.select(
-            F.explode("cand_polys").alias("poly_id")).distinct()
-        dim = polygons.join(cand_ids, "poly_id").select(
-            "poly_id", "ordinal", "rings")
-        rings = "dim" if dim.count() <= 100_000 else "join"
-    elif rings == "dim":
-        cand_ids = fc.select(
-            F.explode("cand_polys").alias("poly_id")).distinct()
-        dim = polygons.join(cand_ids, "poly_id").select(
-            "poly_id", "ordinal", "rings")
-    if rings == "dim":
-        rings_b = sc.broadcast({
-            r["poly_id"]: (int(r["ordinal"]), r["rings"])
-            for r in dim.collect()})
-        fc = fc.select("gx", "gy",
-                       F.sort_array("cand_polys").alias("cand_polys"))
-    else:
-        fc = attach_rings(fc, polygons)
-    if broadcast_cands:
-        fc = F.broadcast(fc)
+        pairs = _footprint_pairs_salted(meta_src, poly_cells, base_res)
     # Only the columns the UDF needs cross the Arrow boundary: caption and
     # phash stay JVM-side (columnar pruning keeps them out of the scan too).
-    # The candidate attach is a broadcast equi-join on the (gx, gy)
-    # footprint parsed JVM-side from image_id — no shuffle of tile bytes;
-    # candidate RINGS arrive via the pruned-dimension broadcast or (scale
-    # path) through the same join — see the ``rings`` docstring above.
-    work = (tiles.select("image_id", "bytes", "w", "h", "fmt")
-            .withColumn("gx", F.regexp_extract(
-                "image_id", r"_x(\d+)_", 1).cast("int"))
-            .withColumn("gy", F.regexp_extract(
-                "image_id", r"_y(\d+)$", 1).cast("int"))
-            .join(fc, ["gx", "gy"]))
+    work = tiles.select(
+        "image_id", "bytes", "w", "h", "fmt",
+        F.regexp_extract("image_id", r"_x(\d+)_", 1).cast("int").alias("gx"),
+        F.regexp_extract("image_id", r"_y(\d+)$", 1).cast("int").alias("gy"))
+    dims_b = planned = None
+    if rings != "join":
+        cand_rows, ext_rows = _plan_dims(
+            pairs, polygons, DIM_MAX_POLYS + 1 if rings == "auto" else None,
+            meta_src if want_extents else None)
+        if len(cand_rows) <= DIM_MAX_POLYS or rings == "dim":
+            cmap, rmap = _dims(cand_rows)
+            dims_b = sc.broadcast((cmap, rmap))
+            planned = (rmap, ext_rows)
+            # tiles of a footprint without candidates never cross Arrow:
+            # one JVM-side IN over the packed (gx, gy) keys (a single
+            # parsed expression, InSet after optimisation)
+            keys = ",".join(str(gx << 32 | gy) for gx, gy in cmap)
+            work = work.filter(
+                F.expr(f"(shiftleft(CAST(gx AS BIGINT), 32) | gy) "
+                       f"IN ({keys})") if keys else F.lit(False))
+    if dims_b is None:
+        # scale path: rings travel inside a broadcast equi-join on the
+        # (gx, gy) footprint — no driver collect of the layer
+        fc = attach_rings(_by_footprint(pairs), polygons)
+        if broadcast_cands:
+            fc = F.broadcast(fc)
+        work = work.join(fc, ["gx", "gy"])
 
     # Co-locate same-footprint tiles inside each partition: ownership
     # (pixel -> polygon) is timestep-invariant per grid slot, so adjacent
@@ -448,15 +465,66 @@ def drill_partials(tiles: DataFrame, polygons: DataFrame, plugin: DrillSpec,
 
     def run(batches):
         g: GridSpec = grid_b.value
-        rmap = rings_b.value if rings_b is not None else None
-        driller = _make_driller(plugin, g, rmap)
+        driller = _make_driller(plugin, g,
+                                dims_b.value if dims_b is not None else None)
 
         for rb in batches:
             out = _empty_out(plugin)
             _drill_rows_arrow(plugin, rb, driller, out)
             yield _flush_arrow(plugin, out)
 
-    return work.mapInArrow(run, schema=schema)
+    return work.mapInArrow(run, schema=schema), planned
+
+
+def drill_partials(tiles: DataFrame, polygons: DataFrame, plugin: DrillSpec,
+                   grid: GridSpec, *, base_res: int = BASE_RES,
+                   broadcast_cover: bool = True,
+                   broadcast_cands: bool = True,
+                   rings: str = "auto",
+                   meta: DataFrame | None = None) -> DataFrame:
+    """Per-(polygon, tile) partial aggregates:
+    ``(poly_id, image_id, ts, <partial cols>)``.  This is the map-side
+    combine stage; ``drill`` folds it into final metrics.  Exposed
+    separately because the rows double as the tile->polygon assignment
+    record (lineage + golden tests).
+
+    ``rings`` selects how candidates and their geometry reach the
+    workers:
+
+    * ``"dim"`` — the driver plans the drill with ONE action: a collect
+      of the candidate-pruned polygon dimension at polygon grain
+      (``poly_id, ordinal, rings`` and the footprints it is a candidate
+      of).  The driver turns it into ``{(gx, gy): ascending [(ordinal,
+      poly_id)]}`` and ``{poly_id: rings}`` and ships both in one torrent
+      broadcast: each ring set reaches each executor once, instead of
+      being re-serialised across the Arrow boundary for every timestep
+      row of its footprint.  The tile side needs no candidate join — the
+      UDF looks up each footprint by the (gx, gy) it parses — and tiles
+      of footprints without candidates are filtered JVM-side.  Geometry
+      is pruned to polygons that are a candidate of at least one
+      footprint in this drill, so broadcast size tracks the queried
+      region, not the layer.
+    * ``"join"`` — rings travel inside the candidate join (attach_rings);
+      nothing is collected at the driver.  NB with the default
+      ``broadcast_cands=True`` the ring-attached candidate table is still
+      BROADCAST — since rings are nested per footprint, that broadcast is
+      at least as large as the pruned dimension, so this mode trades
+      driver memory for executor broadcast memory without removing the
+      size ceiling.  When the candidate GEOMETRY itself outgrows the
+      broadcast budget, use :func:`drill_partials_cogrouped` over a
+      bucketed tile layout — Exchange-free on the tile side, geometry
+      shuffled (not broadcast) on the footprint key.
+    * ``"auto"`` (default) — ``dim`` while the pruned dimension holds at
+      most ``DIM_MAX_POLYS`` (100k) polygons, else ``join``; the
+      threshold is checked inside the same single action (the collect is
+      limited to one row over it).
+
+    ``broadcast_cands`` applies to the ``join`` path only.
+    """
+    return _drill_partials(tiles, polygons, plugin, grid, base_res=base_res,
+                           broadcast_cover=broadcast_cover,
+                           broadcast_cands=broadcast_cands, rings=rings,
+                           meta=meta, want_extents=False)[0]
 
 
 def _flush_arrow(plugin: DrillSpec, out: dict):
@@ -511,7 +579,7 @@ def _drill_rows_arrow(plugin: DrillSpec, rb, driller, out: dict) -> None:
     hs = cols["h"].to_numpy()
     ws = cols["w"].to_numpy()
     fmts = cols["fmt"].to_pylist()
-    cand_col = cols["cand_polys"]
+    cand_col = cols.get("cand_polys")   # the rings="join" payload
     bcol = cols["bytes"]
     if isinstance(bcol, pa.ChunkedArray):
         bcol = bcol.combine_chunks()
@@ -533,7 +601,8 @@ def _drill_rows_arrow(plugin: DrillSpec, rb, driller, out: dict) -> None:
             j += 1
         gx, gy = int(gxs[i]), int(gys[i])
         h, w, fmt = int(hs[i]), int(ws[i]), fmts[i]
-        cands = cands_for(gx, gy, cand_col[i].as_py())
+        cands = cands_for(gx, gy, None if cand_col is None
+                          else cand_col[i].as_py())
         metas = []
         rows = []
         for k in range(i, j):
@@ -590,18 +659,23 @@ def drill(tiles: DataFrame, polygons: DataFrame, plugin: DrillSpec,
 
     ``meta`` optionally supplies the placement table (tile_meta shape) from
     a lightweight catalog source so the metadata passes (footprints,
-    extents) never scan the heavy bytes column."""
-    partials = drill_partials(tiles, polygons, plugin, grid,
-                              base_res=base_res,
-                              broadcast_cover=broadcast_cover,
-                              broadcast_cands=broadcast_cands,
-                              rings=rings,
-                              meta=meta)
+    extents) never scan the heavy bytes column.  On the driver-planned
+    path (``rings`` ``"auto"``/``"dim"``) the per-timestep extents ride
+    the single planning action and the edge flags are computed from the
+    rings it collected (:func:`_planned_edge_flags`)."""
+    partials, planned = _drill_partials(
+        tiles, polygons, plugin, grid, base_res=base_res,
+        broadcast_cover=broadcast_cover, broadcast_cands=broadcast_cands,
+        rings=rings, meta=meta, want_extents=partial)
     result = partials.groupBy("poly_id", "ts").agg(*plugin.final_aggs())
 
     if partial:
-        meta_src = meta if meta is not None else tile_meta(tiles, grid)
-        result = attach_edge_flags(result, polygons, extents_by_ts(meta_src))
+        if planned is not None:
+            result = _planned_edge_flags(result, *planned)
+        else:
+            meta_src = meta if meta is not None else tile_meta(tiles, grid)
+            result = attach_edge_flags(result, polygons,
+                                       extents_by_ts(meta_src))
     return result
 
 
@@ -745,7 +819,6 @@ def drill_partials_cogrouped(tiles: DataFrame, polygons: DataFrame,
             driller = (drill_one, lambda gx, gy, payload: cands,
                        owner_for, prep_cache)
             for rb in ltab.combine_chunks().to_batches():
-                rb = rb.append_column("cand_polys", pa.nulls(rb.num_rows))
                 _drill_rows_arrow(plugin, rb, driller, out)
         return pa.Table.from_batches([_flush_arrow(plugin, out)])
 
@@ -772,13 +845,23 @@ def drill_cogrouped(tiles: DataFrame, polygons: DataFrame, plugin: DrillSpec,
     return result
 
 
+def _edge_flags(rings, box, ex0, ey0, ex1, ey1) -> tuple:
+    """(north, south, east, west) overflow of the extent (reference
+    drill.py:104-220 rule, numpy port), skipping the clip when the
+    polygon's bbox lies inside the extent or misses it."""
+    if not geom.overflow_possible(box, ex0, ey0, ex1, ey1):
+        return (False, False, False, False)
+    d = geom.edge_directions(rings, ex0, ey0, ex1, ey1)
+    return (d["North"], d["South"], d["East"], d["West"])
+
+
 def _edge_flags_per_extent(polygons: DataFrame,
                            extents: DataFrame) -> DataFrame:
     """(poly_id, ex0, ey0, ex1, ey1, conflux_n/s/e/w) — the edge-overflow
     flags per (polygon, DISTINCT extent): the O(polygons x distinct
-    extents) core of the edge-flag rule (reference drill.py:104-220,
-    numpy port).  The polygon pass is repartitioned so the geometry work
-    parallelises instead of riding a single-partition crossJoin."""
+    extents) core of the edge-flag rule.  The polygon pass is
+    repartitioned so the geometry work parallelises instead of riding a
+    single-partition crossJoin."""
     spark = polygons.sparkSession
     ext_d = extents.select("ex0", "ey0", "ex1", "ey1").distinct()
     j = (polygons.select("poly_id", "rings").crossJoin(F.broadcast(ext_d))
@@ -791,29 +874,14 @@ def _edge_flags_per_extent(polygons: DataFrame,
         for pdf in batches:
             rows = []
             for r in pdf.itertuples():
-                d = geom.edge_directions(r.rings, r.ex0, r.ey0, r.ex1, r.ey1)
                 rows.append((r.poly_id, r.ex0, r.ey0, r.ex1, r.ey1,
-                             d["North"], d["South"], d["East"], d["West"]))
+                             *_edge_flags(r.rings, geom.bbox(r.rings),
+                                          r.ex0, r.ey0, r.ex1, r.ey1)))
             yield pd.DataFrame(rows, columns=[
                 "poly_id", "ex0", "ey0", "ex1", "ey1", "conflux_n",
                 "conflux_s", "conflux_e", "conflux_w"])
 
     return j.mapInPandas(run, schema=schema)
-
-
-def edge_flags_df(polygons: DataFrame, extents: DataFrame) -> DataFrame:
-    """Per (poly_id, ts): in which compass directions the polygon overflows
-    the observed extent (reference drill.py:104-220 rule, numpy port).
-
-    Computed per DISTINCT extent (usually one — the grid bbox is
-    time-invariant) and joined back to the timesteps, so compute cost is
-    O(polygons x distinct extents), not O(polygons x timesteps).  NB the
-    RESULT of this helper is O(polygons x timesteps) rows — drill()
-    attaches flags via :func:`attach_edge_flags` instead, which never
-    materialises (or broadcasts) that product."""
-    per_extent = _edge_flags_per_extent(polygons, extents)
-    return (extents.join(per_extent, ["ex0", "ey0", "ex1", "ey1"])
-            .select("poly_id", "ts", *FLAG_COLS))
 
 
 def attach_edge_flags(result: DataFrame, polygons: DataFrame,
@@ -837,4 +905,56 @@ def attach_edge_flags(result: DataFrame, polygons: DataFrame,
             .join(F.broadcast(per_extent),
                   ["poly_id", *ext_cols], "left")
             .drop(*ext_cols)
+            .fillna(False, subset=FLAG_COLS))
+
+
+def _sql_lit(v) -> str:
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    return f"{v}L"
+
+
+def _local_table(spark, cols: list, rows: list) -> DataFrame:
+    """A local relation from driver rows of strings, ints and booleans,
+    parsed from one SQL ``VALUES`` text.  ``createDataFrame`` of a list
+    would build a Python RDD instead, whose evaluation for the broadcast
+    runs Python jobs (measured 0.2-0.5 s each)."""
+    values = ", ".join("(" + ", ".join(map(_sql_lit, r)) + ")" for r in rows)
+    return spark.sql(f"SELECT * FROM VALUES {values} AS t({', '.join(cols)})")
+
+
+def _planned_edge_flags(result: DataFrame, rmap: dict,
+                        extent_rows: list) -> DataFrame:
+    """:func:`attach_edge_flags` from what the planning action collected:
+    flags per (candidate polygon, distinct extent) are computed on the
+    driver from the candidate rings (a polygon that is no footprint's
+    candidate has no result row to flag), and only the flagged rows —
+    plus the timesteps whose extent has one — are attached, through two
+    broadcast local relations.  With no flagged row the flags are
+    constant False and nothing is joined."""
+    eids: dict = {}
+    ts_eid = [(r["ts_us"], eids.setdefault(
+        (r["ex0"], r["ey0"], r["ex1"], r["ey1"]), len(eids)))
+        for r in extent_rows]
+    flagged = []
+    for pid, rings in rmap.items():
+        box = geom.bbox(rings)
+        for ext, eid in eids.items():
+            f = _edge_flags(rings, box, *ext)
+            if any(f):
+                flagged.append((pid, eid, *map(bool, f)))
+    if not flagged:
+        return result.selectExpr("*", *[f"false AS {c}" for c in FLAG_COLS])
+    spark = result.sparkSession
+    used = {f[1] for f in flagged}
+    ts_map = _local_table(spark, ["ts_us", "eid"],
+                          [(t, e) for t, e in ts_eid if e in used]
+                          ).selectExpr("timestamp_micros(ts_us) AS ts", "eid")
+    flags = _local_table(spark, ["poly_id", "eid", *FLAG_COLS], flagged)
+    return (result
+            .join(F.broadcast(ts_map), "ts", "left")
+            .join(F.broadcast(flags), ["poly_id", "eid"], "left")
+            .drop("eid")
             .fillna(False, subset=FLAG_COLS))

@@ -392,7 +392,11 @@ def bm25_topk(docs: DataFrame, query_terms=BM25_QUERY_TERMS, k: int = 10,
     matching term are excluded, as before — they have no tf rows in the
     oracle's formulation).  No Python anywhere.
     """
-    terms = [t.lower() for t in query_terms]
+    # a repeated query term scores once (BM25 sums over distinct terms)
+    terms = list(dict.fromkeys(t.lower() for t in query_terms))
+    if not terms:
+        return docs.select("doc_id").where(F.lit(False)).select(
+            "doc_id", F.lit(0.0).alias("score"), F.lit(0).alias("rnk"))
     toksc = tokens_col(F.col("text"))
     row = once(ensure_spread(docs).select(
         "doc_id", F.size(toksc).alias("dl"),

@@ -5,13 +5,13 @@ expressions (regexp_extract + arithmetic) — no UDF, so Catalyst can prune
 the heavy ``bytes`` column out of every plan that only needs placement
 (the scan for the candidate join reads only ``image_id``).
 
-``tile_cells`` emits, per tile, its covering cells at BASE_RES **and every
-ancestor resolution down to the polygon covers' coarsest level**, entirely
-with ``sequence``/``explode`` + bit arithmetic (whole-stage codegen; no
-Python).  A single equi-join of this against the polygons' compact adaptive
-cover then matches every tile-overlaps-polygon pair — the distributable
-replacement for the reference's whole-scene rasterisation spatial join
-(reference drill.py:32-101).
+``tile_cells`` emits, per tile footprint, its covering cells at BASE_RES
+**and every ancestor resolution down to the polygon covers' coarsest
+level**, entirely with ``sequence``/``explode`` + bit arithmetic
+(whole-stage codegen; no Python).  A single equi-join of this against the
+polygons' compact adaptive cover then matches every tile-overlaps-polygon
+pair — the distributable replacement for the reference's whole-scene
+rasterisation spatial join (reference drill.py:32-101).
 """
 
 from __future__ import annotations
@@ -46,35 +46,29 @@ def tile_meta(tiles: DataFrame, grid: GridSpec) -> DataFrame:
 
 def tile_cells(meta: DataFrame, base_res: int = BASE_RES,
                coarsest: int = COARSEST_COVER_RES) -> DataFrame:
-    """(image_id, cell) — tile bbox cover at every res in
-    [coarsest, base_res].  All JVM-side: explode(sequence(...)) x2 plus bit
-    packing; ~(base_res - coarsest) + a few dozen rows per tile."""
-    df = meta.select(
-        "image_id", "x0", "y0", "x1", "y1",
-        F.explode(F.sequence(F.lit(coarsest), F.lit(base_res))).alias("cres"),
-    ).withColumn(
-        "csize", F.lit(WORLD) / F.pow(F.lit(2.0), F.col("cres"))
-    )
-    df = df.select(
-        "image_id", "cres", "csize",
-        F.floor(F.col("x0") / F.col("csize")).alias("ix0"),
-        F.floor((F.col("x1") - F.lit(1e-6)) / F.col("csize")).alias("ix1"),
-        F.floor(F.col("y0") / F.col("csize")).alias("iy0"),
-        F.floor((F.col("y1") - F.lit(1e-6)) / F.col("csize")).alias("iy1"),
-    )
-    df = df.select(
-        "image_id", "cres", "iy0", "iy1",
-        F.explode(F.sequence("ix0", "ix1")).alias("ix"),
-    ).select(
-        "image_id", "cres", "ix",
-        F.explode(F.sequence("iy0", "iy1")).alias("iy"),
-    )
-    cell = (
-        F.shiftleft(F.col("cres").cast("long"), 58)
-        .bitwiseOR(F.shiftleft(F.col("ix"), RES_BITS))
-        .bitwiseOR(F.col("iy"))
-    )
-    return df.select("image_id", cell.alias("cell"))
+    """(gx, gy, cell) — footprint bbox cover at every res in [coarsest,
+    base_res].  All JVM-side: explode(sequence(...)) x2 plus bit packing;
+    ~(base_res - coarsest) + a few dozen rows per footprint.  Built from
+    SQL expression strings: one gateway call per step instead of one per
+    column function (the plan is rebuilt on every drill)."""
+    csize = f"({WORLD!r}D / power(2.0D, cres))"
+    df = meta.selectExpr(
+        "gx", "gy", "x0", "y0", "x1", "y1",
+        f"explode(sequence({coarsest}, {base_res})) AS cres")
+    df = df.selectExpr(
+        "gx", "gy", "cres",
+        f"floor(x0 / {csize}) AS ix0",
+        f"floor((x1 - 1.0E-6D) / {csize}) AS ix1",
+        f"floor(y0 / {csize}) AS iy0",
+        f"floor((y1 - 1.0E-6D) / {csize}) AS iy1")
+    df = df.selectExpr("gx", "gy", "cres", "iy0", "iy1",
+                       "explode(sequence(ix0, ix1)) AS ix")
+    df = df.selectExpr("gx", "gy", "cres", "ix",
+                       "explode(sequence(iy0, iy1)) AS iy")
+    return df.selectExpr(
+        "gx", "gy",
+        f"shiftleft(CAST(cres AS BIGINT), 58) | shiftleft(ix, {RES_BITS})"
+        " | iy AS cell")
 
 
 def extents_by_ts(meta: DataFrame) -> DataFrame:
@@ -82,6 +76,6 @@ def extents_by_ts(meta: DataFrame) -> DataFrame:
     engine's analogue of the reference's scene extent used for edge-direction
     flags (reference drill.py:604-616)."""
     return meta.groupBy("ts").agg(
-        F.min("x0").alias("ex0"), F.min("y0").alias("ey0"),
-        F.max("x1").alias("ex1"), F.max("y1").alias("ey1"),
+        F.expr("min(x0) AS ex0"), F.expr("min(y0) AS ey0"),
+        F.expr("max(x1) AS ex1"), F.expr("max(y1) AS ey1"),
     )

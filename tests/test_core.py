@@ -248,3 +248,16 @@ def test_cluster_by_zorder_locality(spark):
              .toPandas())
     assert len(spans) >= 8  # range partitioner actually split the key
     assert spans["area"].mean() < (1024 * 1024) / 4
+
+
+def test_default_driver_memory_fits_host():
+    """The driver heap default is half the host's RAM, capped at 16g."""
+    import os
+
+    from dea_conflux_spark.config import default_driver_memory
+
+    got = default_driver_memory()
+    assert got.endswith("m")
+    total_mb = (os.sysconf("SC_PAGE_SIZE")
+                * os.sysconf("SC_PHYS_PAGES")) >> 20
+    assert int(got[:-1]) == max(1024, min(16 << 10, total_mb // 2))

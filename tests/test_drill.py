@@ -262,6 +262,53 @@ def test_rings_join_and_dim_modes_identical(spark, tiles, polygons, grid):
     pd.testing.assert_frame_equal(a, b)
 
 
+def _count_actions(monkeypatch, df_cls) -> list:
+    """Record every eager DataFrame action issued while patched."""
+    calls = []
+    for name in ("collect", "count", "localCheckpoint", "toPandas"):
+        orig = getattr(df_cls, name)
+
+        def counted(self, *a, _orig=orig, _name=name, **k):
+            calls.append(_name)
+            return _orig(self, *a, **k)
+        monkeypatch.setattr(df_cls, name, counted)
+    return calls
+
+
+def test_default_drill_plans_with_one_action(monkeypatch, tiles, polygons,
+                                             grid, c3_result):
+    """The default drill (broadcast cover, rings="auto", edge flags) plans
+    itself with exactly ONE DataFrame action before the write — the
+    polygon-grain candidate collect, which also carries the per-timestep
+    extents — and no eager localCheckpoint or count."""
+    calls = _count_actions(monkeypatch, type(tiles))
+    res = drill_op.drill(tiles, polygons, get_plugin("waterbodies_c3"),
+                         grid, partial=True)
+    assert calls == ["collect"]
+    monkeypatch.undo()
+    pd.testing.assert_frame_equal(
+        res.toPandas().sort_values(["poly_id", "ts"]).reset_index(drop=True),
+        c3_result.sort_values(["poly_id", "ts"]).reset_index(drop=True))
+
+
+def test_rings_auto_over_threshold_takes_join_path(monkeypatch, tiles,
+                                                   polygons, grid,
+                                                   c3_result):
+    """rings="auto" with more candidate polygons than DIM_MAX_POLYS still
+    plans with one (limited) collect, then drills through the
+    ring-carrying candidate join — with the same output."""
+    monkeypatch.setattr(drill_op, "DIM_MAX_POLYS", 3)
+    calls = _count_actions(monkeypatch, type(tiles))
+    res = drill_op.drill(tiles, polygons, get_plugin("waterbodies_c3"),
+                         grid, partial=True)
+    assert calls == ["collect"]
+    monkeypatch.undo()
+    assert "cand_polys" in _fmt_plan(res)
+    pd.testing.assert_frame_equal(
+        res.toPandas().sort_values(["poly_id", "ts"]).reset_index(drop=True),
+        c3_result.sort_values(["poly_id", "ts"]).reset_index(drop=True))
+
+
 def test_mini_drill_fixture_matches_duckdb_oracle(spark):
     """The driver-gate mini fixture (convex polygons -> half-plane SQL)
     agrees with the engine drill row-for-row — the flagship semantics

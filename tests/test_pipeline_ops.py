@@ -1162,6 +1162,26 @@ def test_bm25_topk_excludes_nonmatching_docs(spark):
     assert out["score"].iloc[0] == math.floor(score * 1e4 + 0.5) / 1e4
 
 
+def test_bm25_topk_duplicate_query_terms_score_once(docs):
+    """A query term repeated (in any case) scores exactly as if given
+    once: BM25 sums over the distinct query terms."""
+    once_ = textqa.bm25_topk(docs, query_terms=("spark", "query"),
+                             k=5).toPandas()
+    twice = textqa.bm25_topk(docs, query_terms=("spark", "query", "Spark",
+                                                "spark"), k=5).toPandas()
+    pd.testing.assert_frame_equal(twice, once_)
+
+
+def test_bm25_topk_empty_query_is_empty(docs):
+    """No query terms: an empty (doc_id, score, rnk) result, not an
+    error."""
+    out = textqa.bm25_topk(docs, query_terms=(), k=5)
+    assert out.columns == ["doc_id", "score", "rnk"]
+    assert dict(out.dtypes) == {"doc_id": "bigint", "score": "double",
+                                "rnk": "int"}
+    assert out.count() == 0
+
+
 def test_kmeans_assign_vs_numpy(embeddings):
     """kmeans_assign matches a from-scratch numpy Lloyd's with the same
     deterministic init, 6-dp centroid pinning, and tie rule."""

@@ -122,3 +122,105 @@ def test_plugin_raw_path_identical_to_generic(seed):
             exp = plugin.partials_grouped(plugin.transform(raw), ow, ords,
                                           scratch={})
             assert got == exp, (name, got, exp)
+
+
+@given(seed=st.integers(0, 2**31 - 1), snap=st.booleans())
+@settings(max_examples=300, deadline=None)
+def test_edge_flag_bbox_prefilter_is_exact(seed, snap):
+    """Wherever the bbox prefilter lets the edge-flag rule skip the clip
+    (bbox inside the extent, or meeting it in at most an edge or corner)
+    ``edge_directions`` reports no overflow — on random star polygons
+    (some with a hole, some snapped to a 0.5 grid) against extents whose
+    edges equal, touch, straddle or miss the polygon's bbox edges."""
+    rng = np.random.default_rng(seed)
+    n = int(rng.integers(3, 10))
+    ang = np.sort(rng.uniform(0, 2 * np.pi, n))
+    rad = rng.uniform(1, 6, n)
+    cx, cy = rng.integers(-4, 5, 2)
+    outer = np.c_[cx + rad * np.cos(ang), cy + rad * np.sin(ang)]
+    rings = [outer]
+    if rng.random() < 0.3:
+        rings.append(np.array([[cx - .4, cy - .4], [cx + .4, cy - .4],
+                               [cx + .4, cy + .4], [cx - .4, cy + .4]]))
+    if snap:
+        rings = [np.round(r * 2) / 2 for r in rings]
+    bx0, by0, bx1, by1 = geom.bbox(rings)
+
+    def edges(lo, hi):
+        d = float(rng.choice([0.5, 1.0, 2.5]))
+        opts = [lo, hi, lo - d, lo + d, hi - d, hi + d, (lo + hi) / 2,
+                float(rng.uniform(lo - 8, hi + 8))]
+        a, b = sorted(float(v) for v in rng.choice(opts, 2))
+        return (a, b) if a < b else (a, a + d)
+
+    (rx0, rx1), (ry0, ry1) = edges(bx0, bx1), edges(by0, by1)
+    if rng.random() < 0.15:
+        rx0, ry0, rx1, ry1 = bx0, by0, bx1, by1    # extent == bbox
+    if not geom.overflow_possible((bx0, by0, bx1, by1), rx0, ry0, rx1, ry1):
+        d = geom.edge_directions(rings, rx0, ry0, rx1, ry1)
+        assert not any(d.values()), (rings, (rx0, ry0, rx1, ry1), d)
+
+
+def _classify_rects_scalar(prep, x0, y0, x1, y1):
+    """Loop reference of ``geom.classify_rects``: per rect, the slab
+    clip of every edge, the four corner PIPs and the vertex-in-rect
+    scan, in scalar floats."""
+    bx0, by0, bx1, by1 = prep.bbox
+    out = []
+    for a, b, c, d in zip(x0, y0, x1, y1):
+        if c <= bx0 or a >= bx1 or d <= by0 or b >= by1:
+            out.append(0)
+            continue
+        crossed = False
+        for ex, ey, fx, fy in zip(prep.x1, prep.y1, prep.x2, prep.y2):
+            dx, dy = fx - ex, fy - ey
+            t0, t1, outside = 0.0, 1.0, False
+            for p, q in ((-dx, ex - a), (dx, c - ex), (-dy, ey - b),
+                         (dy, d - ey)):
+                if p == 0:
+                    outside |= q < 0
+                elif p < 0:
+                    t0 = max(t0, q / p)
+                else:
+                    t1 = min(t1, q / p)
+            if not outside and t0 <= t1:
+                crossed = True
+                break
+        corners = all(geom.contains(prep, [px], [py])[0]
+                      for px, py in ((a, b), (c, b), (a, d), (c, d)))
+        vert_in = any(a <= vx < c and b <= vy < d
+                      for vx, vy in zip(prep.x1, prep.y1))
+        if corners and not crossed and not vert_in:
+            out.append(2)
+        else:
+            out.append(1 if crossed or vert_in or corners else 0)
+    return out
+
+
+@given(seed=st.integers(0, 2**31 - 1))
+@settings(max_examples=60, deadline=None)
+def test_classify_rects_matches_scalar_reference(seed):
+    """The vectorised rect classifier (cover build, owner interior fast
+    path) equals its scalar loop reference, rect edges on polygon
+    vertices included."""
+    rng = np.random.default_rng(seed)
+    n = int(rng.integers(3, 12))
+    ang = np.sort(rng.uniform(0, 2 * np.pi, n))
+    rad = rng.uniform(1, 6, n)
+    rings = [np.c_[rad * np.cos(ang), rad * np.sin(ang)]]
+    if rng.random() < 0.3:
+        rings.append(np.array([[-.3, -.3], [.3, -.3], [.3, .3], [-.3, .3]]))
+    if rng.random() < 0.5:
+        rings = [np.round(r * 2) / 2 for r in rings]
+    prep = geom.prepare(rings)
+    x0 = rng.uniform(-8, 6, 24)
+    y0 = rng.uniform(-8, 6, 24)
+    k = rng.integers(0, len(prep.x1), 24)
+    x0[:8] = prep.x1[k[:8]]
+    y0[8:16] = prep.y1[k[8:16]]
+    x1 = x0 + rng.uniform(0.1, 8, 24)
+    y1 = y0 + rng.uniform(0.1, 8, 24)
+    x1[16:] = prep.x1[k[16:]]
+    x0[16:] = x1[16:] - rng.uniform(0.1, 8, 8)
+    got = geom.classify_rects(prep, x0, y0, x1, y1)
+    assert list(got) == _classify_rects_scalar(prep, x0, y0, x1, y1)

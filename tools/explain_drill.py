@@ -2,8 +2,9 @@
 
 * the tile scan for the UDF stage reads only the needed columns
   (caption/phash pruned),
-* the candidate attach and cover joins are broadcast (no shuffle of tile
-  bytes anywhere),
+* the default plan has no candidate join on the tile side (candidates
+  and rings arrive in the planning broadcast), and no shuffle of tile
+  bytes anywhere,
 * exactly one shuffle feeds the final (poly_id, ts) aggregate, operating
   on partial-aggregate rows, never pixels.
 
@@ -71,20 +72,21 @@ def main():
 
     check("final agg is hash aggregate on (poly_id, ts)",
           re.search(r"Keys \[2\]: \[poly_id#\d+, ts#\d+\]", plan))
-    check("broadcast exchanges present (cover/candidates/flags)",
-          plan.count("BroadcastExchange") >= 2)
+    check("default plan: edge flags attached through broadcast local "
+          "relations (the timestep->extent map and the flagged rows)",
+          plan.count("BroadcastExchange") >= 2
+          and "LocalTableScan" in plan)
     check("partial->final combine via single Exchange of partial rows",
           re.search(r"hashpartitioning\(poly_id#\d+, ts#\d+", plan))
     n_shuffles = len(re.findall(r"hashpartitioning\(", plan))
     check("no shuffle carries the bytes column",
           not re.search(r"Exchange[^\n]*bytes", plan))
-    check("python stage is Arrow-batched (MapInPandas/ArrowEvalPython)",
-          ("MapInPandas" in plan) or ("ArrowEval" in plan))
-    check("default (auto/dim) plan: per-row candidate payload is id-only "
-          "— no ring-struct aggregation feeds the tile join (pruned "
-          "dimension broadcast instead; rings appear only in the "
-          "cover-building scan)",
-          not re.search(r"collect_list\(struct\(ordinal", plan))
+    check("python stage is Arrow-batched (MapInArrow)",
+          "MapInArrow" in plan)
+    check("default (auto/dim) plan: no candidate join and no candidate "
+          "payload on the tile side — the UDF looks candidates up by "
+          "(gx, gy) in the single planning action's broadcast",
+          "cand_polys" not in plan and "rings" not in plan)
     check("rings='join' scale path: rings delivered via candidate join "
           "(collect_list(struct(ordinal, poly_id, rings)); no driver "
           "collect/broadcast of the layer)",
@@ -101,7 +103,7 @@ def main():
     # ---- measured candidate-payload sizes at 100k polygons (the data
     # behind the rings-mode auto-switch thresholds): bytes that would ride
     # the pruned-dimension broadcast vs the ring-attached candidate join
-    # (per-footprint nesting) vs the id-only join payload
+    # (per-footprint nesting) vs the id-only candidate lists
     from pyspark.sql import functions as F
 
     big_grid = datagen.GridSpec(G=8, T=1, w=32, h=32)
@@ -133,8 +135,9 @@ def main():
         "Coordinate bytes that each strategy moves (vertices x 16 B; "
         "Arrow/java overheads excluded, so ratios are what matter):", "",
         "| payload | bytes |", "|---|---|",
-        f"| id-only per-footprint candidate lists (rings='dim' join "
-        f"payload) | {id_only:,} |",
+        f"| id-only per-footprint candidate lists (rings='dim': the "
+        f"(gx, gy) -> candidates map of the planning broadcast) "
+        f"| {id_only:,} |",
         f"| candidate-PRUNED ring dimension, each polygon once "
         f"(rings='dim' broadcast; {n_cand:,} candidate polygons) "
         f"| {dim:,} |",
